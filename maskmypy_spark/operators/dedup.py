@@ -61,23 +61,36 @@ def doc_quality(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataF
     )
 
 
-def _dup_ngram_col(tcol: str, n: int):
-    """Gopher dup-n-gram fraction over a PRE-PROJECTED token-array column
-    ``tcol``: gram i is built by direct element references
-    (``t[i] || ' ' || t[i+1] ...``) instead of ``concat_ws(slice(...))`` —
-    higher-order-function lambdas run INTERPRETED (CodegenFallback), and
-    the slice allocated a fresh sub-array per gram per doc; the direct
-    form measured 10x faster at 1M docs (43 -> 4.3 s, BENCH/NOTES.md).
-    Identical strings, hence identical fractions: whitespace-split tokens
-    can contain neither NULLs nor the joiner, so element concat equals
-    concat_ws over the slice. The caller must project ``tcol`` in its OWN
-    select so the tokenization runs once per row (CollapseProject keeps
-    non-cheap multi-referenced aliases staged)."""
+def _word_grams(tcol: str, n: int):
+    """Word ``n``-grams of a PRE-PROJECTED token-array column ``tcol``:
+    gram i is built by direct element references (``t[i] || ' ' ||
+    t[i+1] ...``) instead of ``concat_ws(slice(...))`` — higher-order
+    lambdas run INTERPRETED (CodegenFallback), and the slice allocated a
+    fresh sub-array per gram per doc; the direct form measured 10x faster
+    at 1M docs (43 -> 4.3 s, BENCH/NOTES.md). Whitespace-split tokens
+    contain neither NULLs nor the joiner, so element concat equals
+    concat_ws over the slice.
+
+    An EMPTY array when the doc has fewer than ``n`` tokens (or NULL
+    tokens), whatever guard the caller has: Spark's ``sequence(0, -1)`` is
+    ``[0, -1]``, not empty, so an unguarded transform would index before
+    the array. The caller must project ``tcol`` in its OWN select so the
+    tokenization runs once per row (CollapseProject keeps non-cheap
+    multi-referenced aliases staged)."""
     idx = " || ' ' || ".join(f"{tcol}[i + {j}]" for j in range(n))
-    grams = F.expr(f"transform(sequence(0, size({tcol}) - {n}), i -> {idx})")
-    cnt = F.size(F.col(tcol)) - F.lit(n - 1)
+    return F.expr(
+        f"CASE WHEN size({tcol}) >= {n} "
+        f"THEN transform(sequence(0, size({tcol}) - {n}), i -> {idx}) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+
+
+def _dup_ngram_col(tcol: str, n: int):
+    """Gopher dup-n-gram fraction over the token-array column ``tcol``
+    (0.0 when it has no ``n``-gram)."""
+    grams = _word_grams(tcol, n)
     return F.when(
-        cnt >= 1,
+        F.size(F.col(tcol)) >= n,
         F.round(F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams), 6),
     ).otherwise(F.lit(0.0))
 
@@ -165,7 +178,8 @@ def _quality_gated(
     """The shared gate stage of the curate pipelines: per-row quality
     metrics + threshold filters (+ optional deterministic hash sample) as
     ONE projection-and-filter over the scan — nothing shuffles. Returns
-    (key, text, alpha_ratio, dup_ngram_frac)."""
+    (key, text, _t, alpha_ratio, dup_ngram_frac); ``_t`` is the token
+    array, so later stages reuse the gate's tokenization."""
     from ..functions.rng import u_sql
 
     alpha = F.expr(
@@ -187,6 +201,7 @@ def _quality_gated(
         .select(
             key,
             F.col(text),
+            "_t",
             F.explode(
                 F.array(
                     F.struct(
@@ -199,6 +214,7 @@ def _quality_gated(
         .select(
             key,
             F.col(text),
+            "_t",
             F.col("_m.alpha_ratio").alias("alpha_ratio"),
             F.col("_m.dup_ngram_frac").alias("dup_ngram_frac"),
         )
@@ -231,42 +247,52 @@ def curate_near(
     digest election — the full web-corpus curation composition:
 
     1. quality gates (+ optional hash sample) — one projection, no shuffle;
-    2. MinHash-LSH candidate pairs over the SURVIVORS + exact-Jaccard
-       verification (:func:`minhash_lsh_pairs` — one banded shuffle, never
-       all-pairs);
-    3. connected components over the verified pairs
+    2. the per-doc LSH index over the SURVIVORS (:func:`_lsh_index`): one
+       row per gated doc holding its key, both gate metrics and its
+       ``bands`` band keys — the gate metrics ride the MinHash aggregate as
+       ``min()`` carries, so the corpus is tokenized and gated ONCE;
+    3. candidate pairs from ONE band self-join over the index, then the
+       exact-Jaccard verify per candidate pair (:func:`_verified_pairs`);
+    4. connected components over the verified pairs
        (:func:`dedup_clusters`) — component sizes are bounded by real
        near-dup cliques, not the corpus;
-    4. cluster-keeper election: a gated doc survives iff it is in no
-       near-dup pair or is its component's minimum key (= the component's
-       cluster_id label).
+    5. cluster-keeper election over the index: a gated doc survives iff it
+       is in no near-dup pair or is its component's minimum key (= the
+       component's cluster_id label).
 
-    The gated frame is scanned by both the pair derivation and the final
-    election — two passes over a projection, the standard trade against
-    materializing a corpus-scale intermediate. Returns (key, alpha_ratio,
-    dup_ngram_frac, n_near_dups) where ``n_near_dups`` is the size of the
-    keeper's duplicate cluster (1 for docs with no near-dup)."""
+    Docs with fewer than ``shingle_n`` tokens have no signature: they keep
+    their index row, never enter the band join, and are elected as
+    singletons.
+
+    EAGER: the call itself runs Spark jobs. These ``localCheckpoint``s
+    materialize before it returns: the index (one row per gated doc, no
+    text), the candidate pairs, the candidate docs' distinct shingle
+    arrays (both bounded by band collisions), and dedup_clusters' edges
+    and per-round labels. Local checkpoints live on the executors'
+    block managers and are not reliable storage: losing an executor that
+    holds one fails the jobs that read it, late.
+
+    Returns (key, alpha_ratio, dup_ngram_frac, n_near_dups) where
+    ``n_near_dups`` is the size of the keeper's duplicate cluster (1 for
+    docs with no near-dup)."""
     gated = _quality_gated(
         df, key, text, max_repetition, min_alpha, n, sample_rate, seed
     )
-    # shingle_source=df: every LSH candidate already passed the gate (its
-    # signature came from `gated`), so the exact verify reads candidate
-    # texts from the RAW corpus — same rows, but the gate-metric lineage
-    # (which the optimizer does not push the candidate semi-join beneath)
-    # is not re-evaluated corpus-wide a second time.
-    pairs = minhash_lsh_pairs(
-        gated, threshold, num_hashes, bands, key, text, shingle_n, hasher,
-        shingle_source=df,
+    index = _lsh_index(
+        gated, key, shingle_n, num_hashes, bands, hasher,
+        carry=("alpha_ratio", "dup_ngram_frac"),
     )
-    clusters = dedup_clusters(pairs).withColumnRenamed("doc_id", "_cd")
+    # every candidate passed the gate (its band keys came from the index),
+    # so the verify reads candidate texts from the RAW corpus and the gate
+    # lineage is not re-evaluated
+    pairs = _verified_pairs(index, df, key, text, shingle_n, bands, threshold)
+    clusters = dedup_clusters(pairs).select(
+        F.col("doc_id").alias(key), "cluster_id"
+    )
     csize = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("_cn"))
-    # the election only needs (key, metrics) — drop the text payload before
-    # the cluster joins so the corpus text never enters their shuffles
     return (
-        gated.select(key, "alpha_ratio", "dup_ngram_frac")
-        .join(
-            clusters.withColumnRenamed("_cd", key), key, "left"
-        )
+        index.select(key, "alpha_ratio", "dup_ngram_frac")
+        .join(clusters, key, "left")
         .where(F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col(key)))
         .join(csize.withColumnRenamed("cluster_id", key), key, "left")
         .select(
@@ -411,33 +437,14 @@ def dedup_exact(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataF
 
 
 def shingles(
-    df: DataFrame,
-    key: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    distinct: bool = True,
+    df: DataFrame, key: str = "doc_id", text: str = "text", n: int = 3
 ) -> DataFrame:
-    """Distinct word n-gram shingles per document (JVM transform+explode).
-
-    ``distinct=False`` skips the per-doc dedup — and with it a FULL
-    shuffle of the corpus-scale shingle-string stream (the distinct's
-    exchange moves every shingle byte). Correct whenever the consumer is
-    insensitive to per-doc multiplicity: min-aggregation (MinHash
-    signatures — min over a multiset equals min over its set) being the
-    engine's case. Set-semantics consumers (|A|, |A ∩ B| Jaccard counts)
-    must keep the default."""
-    idx = " || ' ' || ".join(f"_t[i + {j}]" for j in range(n))
-    out = (
+    """Distinct word n-gram shingles per document (JVM transform+explode)."""
+    return (
         df.select(key, tokens_col(text).alias("_t"))
-        .where(F.size("_t") >= n)
-        .select(
-            key,
-            F.explode(
-                F.expr(f"transform(sequence(0, size(_t) - {n}), i -> {idx})")
-            ).alias("shingle"),
-        )
+        .select(key, F.explode(_word_grams("_t", n)).alias("shingle"))
+        .distinct()
     )
-    return out.distinct() if distinct else out
 
 
 def ngram_jaccard_pairs(
@@ -463,8 +470,14 @@ def ngram_jaccard_pairs(
     When the cap actually drops shingles a ``UserWarning`` reports how many
     (one cheap aggregate job): true pairs can then be missed — the
     denominator |A|+|B|-|A∩B| still counts dropped shingles, so a capped
-    run only UNDER-estimates jaccard (no false positives)."""
-    sh = shingles(df, key, text, n).cache()
+    run only UNDER-estimates jaccard (no false positives).
+
+    EAGER: the distinct shingle index materializes at call time as a
+    ``localCheckpoint`` (not a session cache), read by the sizes, the hot
+    set and both join sides; it is released with the returned frame.
+    Losing an executor that holds a checkpoint block fails the jobs that
+    read it."""
+    sh = shingles(df, key, text, n).localCheckpoint(eager=True)
     sizes = sh.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
     if max_shingle_df == "auto":
         max_shingle_df = max(4096, int(df.count() * 0.01))
@@ -544,16 +557,9 @@ def fingerprint_winnow(
     the DuckDB oracle computes bit-identical fingerprints."""
     from pyspark.sql.window import Window
 
-    idx = " || ' ' || ".join(f"_t[i + {j}]" for j in range(k))
     grams = (
         df.select(key, tokens_col(text).alias("_t"))
-        .where(F.size("_t") >= k)
-        .select(
-            key,
-            F.posexplode(
-                F.expr(f"transform(sequence(0, size(_t) - {k}), i -> {idx})")
-            ).alias("_pos", "_gram"),
-        )
+        .select(key, F.posexplode(_word_grams("_t", k)).alias("_pos", "_gram"))
         .withColumn(
             "_h",
             F.expr("CAST(conv(substring(md5(_gram), 1, 15), 16, 10) AS BIGINT)"),
@@ -585,105 +591,107 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 32,
-    key: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    hasher: str = "xxhash64",
-) -> DataFrame:
-    """MinHash signature per doc: min over shingles of hash_i(shingle) for
-    i in 0..num_hashes-1. Partitioning-independent (pure function of the
-    shingle set).
-
-    ``hasher='xxhash64'`` (default) seeds the JVM hash per permutation;
-    ``hasher='md5'`` maps each shingle through a 60-bit md5 hash and a
-    universal-hash family mod 2^31-1 (:func:`minhash_coeffs`) — slower,
-    but reproducible in DuckDB, giving the LSH pipeline an exact oracle.
-
-    The shingle stream feeds the min-aggregate WITHOUT the per-doc
-    distinct: min over a multiset equals min over its set (bit-identical
-    signatures), and skipping it removes the full shuffle of the
-    corpus-scale shingle strings — the per-doc partial min then combines
-    map-side and only one partial row per (doc, map partition) reaches
-    the exchange (guide §2 "remove shuffles outright")."""
-    sh = shingles(df, key, text, n, distinct=False)
+def _minhash_cols(shingle: str, num_hashes: int, hasher: str) -> list:
+    """Per-shingle hash columns of the MinHash family over the string
+    column ``shingle``: signature value i of a doc is the min of column i
+    over its shingles. ``hasher='xxhash64'`` seeds the JVM hash per
+    permutation; ``hasher='md5'`` maps each shingle through a 60-bit md5
+    hash and a universal-hash family mod 2^31-1 (:func:`minhash_coeffs`) —
+    slower, but reproducible in DuckDB, giving the LSH pipeline an exact
+    oracle."""
     if hasher == "md5":
         hp = (
-            f"(CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT)"
+            f"(CAST(conv(substring(md5({shingle}), 1, 15), 16, 10) AS BIGINT)"
             f" % {MINHASH_P})"
         )
-        mins = [
-            F.min(F.expr(f"({hp} * {a} + {b}) % {MINHASH_P}")).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
+        return [
+            F.expr(f"({hp} * {a} + {b}) % {MINHASH_P}")
+            for a, b in minhash_coeffs(num_hashes)
         ]
-    elif hasher == "xxhash64":
-        mins = [
-            F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"mh_{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        raise ValueError("hasher must be 'xxhash64' or 'md5'")
-    return sh.groupBy(key).agg(*mins)
+    if hasher == "xxhash64":
+        return [F.xxhash64(F.col(shingle), F.lit(i)) for i in range(num_hashes)]
+    raise ValueError("hasher must be 'xxhash64' or 'md5'")
 
 
-def _lsh_band_candidates(
+def _lsh_index(
     df: DataFrame,
+    key: str,
+    n: int,
     num_hashes: int,
     bands: int,
-    key: str,
-    text: str,
-    n: int,
     hasher: str,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Distinct (d1 < d2) candidate pairs from ONE exploded band self-join
-    (VERDICT r04 next #6): the b band keys explode into (band_idx,
-    band_key) rows and self-join once — the same pigeonhole shape as
-    hamming_pairs — instead of b sequential joins over the banded frame
-    (b small scans, but b shuffle stages). Both hashers already fold the
-    band index into the key, so _b in the join condition is
-    belt-and-braces, not semantics. Plan-gated separately
-    (tests/test_dedup.py::test_minhash_lsh_single_banded_shuffle) because
-    minhash_lsh_pairs checkpoints this stage's output."""
+    """The per-doc LSH index: ONE row per doc of ``df`` (which carries the
+    token array ``_t``) — (key, *carry, band_0 .. band_{bands-1}) —
+    materialized EAGERLY as a ``localCheckpoint``. It holds no text, only
+    the band keys and the carries: the standard LSH index a production
+    system persists anyway, read by the band self-join and by any later
+    stage that needs per-doc values (``carry``).
+
+    The MinHash signature is a per-doc ``min()`` aggregate of
+    :func:`_minhash_cols` over the word ``n``-grams, fed WITHOUT a per-doc
+    distinct: min over a multiset equals min over its set, and skipping it
+    removes a full shuffle of the shingle strings (the partial min
+    combines map-side). The ``carry`` columns (constant per doc) ride the
+    same aggregate as ``min()`` carries, so no second pass over ``df`` is
+    needed. Band b hashes signature rows b*r .. b*r+r-1 (r = num_hashes //
+    bands) with the band index folded in: ``xxhash64`` for the default
+    hasher, and for ``hasher='md5'`` the collision-free concatenated rows,
+    so band membership is EXACTLY "all r values equal" on both engines.
+
+    A doc with fewer than ``n`` tokens has no shingle: ``explode_outer``
+    keeps its row (one NULL shingle) and its band keys are NULL, so it
+    never joins. The guard is needed with both hashers: ``xxhash64`` and
+    ``concat_ws`` skip NULL inputs, so an unguarded empty signature would
+    hash to one shared key per band."""
     rows = num_hashes // bands
-    sig = minhash_signatures(df, num_hashes, key, text, n, hasher)
-    if hasher == "md5":
-        band_cols = [
-            F.concat_ws(
-                ",", F.lit(str(b)), *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-            ).alias(f"band_{b}")
-            for b in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(F.lit(b), *[F.col(f"mh_{b * rows + r}") for r in range(rows)]).alias(
-                f"band_{b}"
-            )
-            for b in range(bands)
-        ]
-    banded = sig.select(key, *band_cols)
-    bv = banded.select(
-        F.col(key),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"), F.col(f"band_{b}").alias("v")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_band"),
-    ).select(key, F.col("_band.b").alias("_b"), F.col("_band.v").alias("_v"))
-    # The self-join consumes bv TWICE; without a materialization each side
-    # re-executes the whole signature pipeline (tokenize -> shingle ->
-    # num_hashes mins) over the corpus — measured as a full duplicate pass
-    # at 1M docs. The banded frame is (key, band_idx, band_key): bands
-    # longs per doc, no text — the standard LSH index a production system
-    # persists anyway — so checkpointing it is a narrow per-doc index, not
-    # a corpus-payload materialization.
-    bv = bv.localCheckpoint(eager=True)
+    mh = _minhash_cols("_sh", num_hashes, hasher)
+    sig = (
+        df.select(key, *carry, F.explode_outer(_word_grams("_t", n)).alias("_sh"))
+        .groupBy(key)
+        .agg(
+            *[F.min(c).alias(c) for c in carry],
+            F.count("_sh").alias("_nsh"),
+            *[F.min(h).alias(f"mh_{i}") for i, h in enumerate(mh)],
+        )
+    )
+
+    def band(b: int):
+        cols = [F.col(f"mh_{b * rows + r}") for r in range(rows)]
+        if hasher == "md5":
+            v = F.concat_ws(",", F.lit(str(b)), *cols)
+        else:
+            v = F.xxhash64(F.lit(b), *cols)
+        return F.when(F.col("_nsh") > 0, v).alias(f"band_{b}")
+
+    return sig.select(key, *carry, *[band(b) for b in range(bands)]).localCheckpoint(
+        eager=True
+    )
+
+
+def _band_pairs(index: DataFrame, key: str, bands: int) -> DataFrame:
+    """Distinct (d1 < d2) candidate pairs of an :func:`_lsh_index` from ONE
+    exploded band self-join: the b band keys explode into (band_idx,
+    band_key) rows and self-join once — the same pigeonhole shape as
+    hamming_pairs — instead of b sequential joins (b shuffle stages). Both hashers already fold the band index into the
+    key, so _b in the join condition is belt-and-braces, not semantics.
+    Docs without a signature (NULL band keys) are filtered out first."""
+    bv = (
+        index.where(F.col("band_0").isNotNull())
+        .select(
+            key,
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.lit(b).alias("b"), F.col(f"band_{b}").alias("v"))
+                        for b in range(bands)
+                    ]
+                )
+            ).alias("_band"),
+        )
+        .select(key, F.col("_band.b").alias("_b"), F.col("_band.v").alias("_v"))
+    )
     l = bv.select(F.col(key).alias("d1"), "_b", "_v")
     r = bv.select(F.col(key).alias("d2"), "_b", "_v")
     return (
@@ -691,6 +699,61 @@ def _lsh_band_candidates(
         .where(F.col("d1") < F.col("d2"))
         .select("d1", "d2")
         .distinct()
+    )
+
+
+def _verified_pairs(
+    index: DataFrame,
+    source: DataFrame,
+    key: str,
+    text: str,
+    n: int,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """(d1, d2, jaccard) for the index's band candidates whose EXACT word
+    ``n``-gram Jaccard reaches ``threshold``. ``source`` supplies the texts
+    and must agree with the indexed docs on (key, text).
+
+    Two eager ``localCheckpoint``s, both bounded by band collisions, never
+    the corpus: the candidate pairs, and each CANDIDATE doc's distinct
+    shingle array (the corpus semi-join-reduces to candidate ids BEFORE
+    tokenization). The verify then runs on the pair row: |A ∩ B| is
+    ``size(array_intersect)``, |A| and |B| are ``size()`` carried as
+    ``_na``/``_nb`` — no shingle rows are exploded, shuffled or joined."""
+    cand = _band_pairs(index, key, bands).localCheckpoint(eager=True)
+    cd = (
+        cand.select(F.col("d1").alias(key))
+        .unionByName(cand.select(F.col("d2").alias(key)))
+        .distinct()
+    )
+    sets = (
+        source.join(cd, key, "leftsemi")
+        .select(key, tokens_col(text).alias("_t"))
+        .select(key, F.array_distinct(_word_grams("_t", n)).alias("_s"))
+        .localCheckpoint(eager=True)
+    )
+
+    def side(d: str, s: str, size: str) -> DataFrame:
+        return sets.select(
+            F.col(key).alias(d), F.col("_s").alias(s), F.size("_s").alias(size)
+        )
+
+    return (
+        cand.join(side("d1", "_sa", "_na"), "d1")
+        .join(side("d2", "_sb", "_nb"), "d2")
+        .select(
+            "d1", "d2", "_na", "_nb",
+            F.size(F.array_intersect("_sa", "_sb")).alias("_c"),
+        )
+        .select(
+            "d1",
+            "d2",
+            F.round(F.col("_c") / (F.col("_na") + F.col("_nb") - F.col("_c")), 6).alias(
+                "jaccard"
+            ),
+        )
+        .where(F.col("jaccard") >= threshold)
     )
 
 
@@ -703,7 +766,6 @@ def minhash_lsh_pairs(
     text: str = "text",
     n: int = 3,
     hasher: str = "xxhash64",
-    shingle_source: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash-LSH, then EXACT Jaccard
     verification of candidates only (no false positives; false-negative
@@ -715,58 +777,16 @@ def minhash_lsh_pairs(
     signature rows (instead of their xxhash64), so band membership is
     EXACTLY "all r signature values equal" on both engines.
 
-    ``shingle_source`` optionally names the frame the exact verify reads
-    candidate texts from; it must agree with ``df`` on (key, text) for
-    every key of ``df``. Pass the PRE-FILTER corpus when ``df`` is an
-    expensively-derived view (curate_near's quality-gated frame): every
-    candidate id came from ``df``'s signatures, so the semi-join below
-    keeps exactly the same docs — but the filter lineage (which Spark does
-    NOT push the semi-join beneath) is never re-evaluated, saving a full
-    corpus pass of gate metrics per query. Defaults to ``df``."""
-    cand = _lsh_band_candidates(
-        df, num_hashes, bands, key, text, n, hasher
-    ).localCheckpoint(eager=True)
-    # Exact verify over CANDIDATE DOCS ONLY (guide §3 "pre-filter the big
-    # side when selective"): shingles of a doc in no candidate pair cannot
-    # touch any output row, so the corpus semi-join-reduces to the
-    # candidate ids BEFORE tokenization, and the bounded candidate shingle
-    # set materializes ONCE (localCheckpoint) for its three consumers —
-    # previously the corpus-wide tokenize+explode+distinct re-executed per
-    # consumer (sizes + both pair sides) and the FULL shingle index
-    # shuffled into the pair join. cand/shc are bounded by the LSH band
-    # collisions (never the corpus), so the documented no-corpus-scale-
-    # materialization rule holds; at sf-bench scale this took curate_near's
-    # verify stage from 3 corpus shingle passes to 1 bounded pass.
-    cd = (
-        cand.select(F.col("d1").alias(key))
-        .unionByName(cand.select(F.col("d2").alias(key)))
-        .distinct()
+    Shares its index (:func:`_lsh_index`), band self-join and verify
+    (:func:`_verified_pairs`) with :func:`curate_near`. EAGER: three
+    ``localCheckpoint``s run at call time — the per-doc index, the
+    candidate pairs and the candidate docs' shingle arrays. Local
+    checkpoints are not reliable storage: losing an executor that holds
+    one fails the jobs that read it, late."""
+    index = _lsh_index(
+        df.select(key, tokens_col(text).alias("_t")), key, n, num_hashes, bands, hasher
     )
-    shc = shingles(
-        (shingle_source if shingle_source is not None else df).join(
-            cd, key, "leftsemi"
-        ),
-        key, text, n,
-    ).localCheckpoint(eager=True)
-    sizes = shc.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
-    a = shc.select(F.col(key).alias("d1"), "shingle")
-    b2 = shc.select(F.col(key).alias("d2"), "shingle")
-    common = (
-        a.join(cand, "d1")
-        .join(b2, ["shingle", "d2"])
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    return (
-        common.join(sizes.select(F.col(key).alias("d1"), F.col("_n").alias("_na")), "d1")
-        .join(sizes.select(F.col(key).alias("d2"), F.col("_n").alias("_nb")), "d2")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("_c") / (F.col("_na") + F.col("_nb") - F.col("_c")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
+    return _verified_pairs(index, df, key, text, n, bands, threshold)
 
 
 def hamming_pairs(
@@ -841,50 +861,52 @@ def dedup_clusters(
     """Resolve near-duplicate PAIRS into duplicate CLUSTERS (connected
     components) so a corpus can actually be deduplicated: every doc in a
     component maps to cluster_id = the component's minimum doc id (the
-    keeper). Iterative min-label propagation — each round is one equi-join
-    + min-aggregate; converges in O(component diameter) rounds, each round
-    checkpointed so lineage stays flat. Near-dup components in practice are
-    tiny cliques, so a handful of rounds suffices; raise ``max_iter`` for
-    pathological chain topologies.
+    keeper). Iterative min-label propagation — converges in O(component
+    diameter) rounds. Round 1 is computed straight from the edges as
+    ``least(a, min(b))`` (every node starts labelled with itself); each
+    later round is one equi-join + min-aggregate. Near-dup components in
+    practice are tiny cliques, so a handful of rounds suffices; raise
+    ``max_iter`` for pathological chain topologies (a path of L nodes
+    needs L rounds: L - 1 that change a label and one that confirms).
+
+    EAGER: the call itself runs Spark jobs. The symmetric edge list and
+    every round's labels materialize as ``localCheckpoint``s (lineage stays
+    flat); each round's changed-label count rides its own checkpoint job
+    as an ``Observation``, so no round needs a probe job. Local
+    checkpoints are not reliable storage: losing an executor that holds
+    one fails the jobs that read it, late.
 
     Returns (doc_id, cluster_id); docs that appear in no pair are their own
     singletons and are simply absent (callers union them back if needed)."""
+    from pyspark.sql import Observation
+
     e = pairs.select(F.col(d1).alias("a"), F.col(d2).alias("b"))
     edges = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().localCheckpoint(eager=True)
-    labels = (
-        edges.select("a")
-        .distinct()
-        .withColumn("label", F.col("a"))
-        .localCheckpoint(eager=True)
+    step = edges.groupBy("a").agg(
+        F.least(F.col("a"), F.min("b")).alias("label"), F.col("a").alias("_old")
     )
-    from pyspark.sql import Observation
-
     for _ in range(max_iter):
-        nbr = edges.join(
-            labels.select(F.col("a").alias("b"), F.col("label").alias("_nl")), "b"
-        ).groupBy("a").agg(F.min("_nl").alias("_best"))
-        # the changed-count rides the round's own materialization job as an
-        # Observation metric (VERDICT r04 next #8) — no per-round probe job
         obs = Observation()
         labels = (
-            labels.join(nbr, "a", "left")
-            .select(
-                "a",
-                F.least(F.col("label"), F.coalesce("_best", F.col("label"))).alias(
-                    "label"
-                ),
-                (F.col("label") != F.least(
-                    F.col("label"), F.coalesce("_best", F.col("label"))
-                )).alias("_chg"),
+            step.observe(
+                obs,
+                F.sum((F.col("label") != F.col("_old")).cast("long")).alias("_n_chg"),
             )
-            .observe(obs, F.sum(F.col("_chg").cast("long")).alias("_n_chg"))
             .select("a", "label")
             .localCheckpoint(eager=True)
         )
         if (obs.get["_n_chg"] or 0) == 0:
             break
+        nbr = edges.join(
+            labels.select(F.col("a").alias("b"), F.col("label").alias("_nl")), "b"
+        ).groupBy("a").agg(F.min("_nl").alias("_best"))
+        step = labels.join(nbr, "a", "left").select(
+            "a",
+            F.least(F.col("label"), F.coalesce("_best", F.col("label"))).alias("label"),
+            F.col("label").alias("_old"),
+        )
     else:
         raise RuntimeError(f"dedup_clusters did not converge in {max_iter} rounds")
     return labels.select(F.col("a").alias("doc_id"), F.col("label").alias("cluster_id"))

@@ -67,8 +67,13 @@ def test_minhash_lsh_single_banded_shuffle(docs):
 
     # the candidate stage is checkpointed inside minhash_lsh_pairs (its
     # bounded output feeds two consumers), which cuts it out of the final
-    # explain — gate the stage's own plan via the extracted builder
-    df = dedup._lsh_band_candidates(docs, 32, 8, "doc_id", "text", 3, "xxhash64")
+    # explain — gate the stage's own plan via the extracted helpers, over
+    # the same per-doc index minhash_lsh_pairs and curate_near build
+    index = dedup._lsh_index(
+        docs.select("doc_id", dedup.tokens_col("text").alias("_t")),
+        "doc_id", 3, 32, 8, "xxhash64",
+    )
+    df = dedup._band_pairs(index, "doc_id", 8)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain(mode="simple")
@@ -198,6 +203,93 @@ def test_dedup_clusters_recovers_planted_components(spark):
     )
     got = {r["doc_id"]: r["cluster_id"] for r in dedup.dedup_clusters(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+
+
+def test_dedup_clusters_path_graph_round_budget(spark):
+    """A path of L nodes needs L rounds (L - 1 that move the min label one
+    hop, one that confirms): it converges at max_iter = L and raises one
+    round short. Round 1 is the fused least(a, min(b)) round, counted like
+    every other round."""
+    n_nodes = 6
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n_nodes)], "d1 long, d2 long"
+    )
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.dedup_clusters(pairs, max_iter=n_nodes).collect()
+    }
+    assert got == {i: 1 for i in range(1, n_nodes + 1)}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.dedup_clusters(pairs, max_iter=n_nodes - 1)
+
+
+def test_dedup_clusters_empty_pairs(spark):
+    pairs = spark.createDataFrame([], "d1 long, d2 long")
+    assert dedup.dedup_clusters(pairs, max_iter=1).count() == 0
+
+
+def _cache_entries(spark) -> int:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+@pytest.mark.parametrize("max_shingle_df", ["auto", None])
+def test_ngram_jaccard_pairs_leaves_no_session_cache(docs, max_shingle_df):
+    """The shingle index is released with the result: once the pairs are
+    collected the session's CacheManager holds no entry it did not hold
+    before (the module's cached fixture is one such entry)."""
+    spark = docs.sparkSession
+    before = _cache_entries(spark)
+    pairs = dedup.ngram_jaccard_pairs(docs, 0.7, max_shingle_df=max_shingle_df)
+    assert (7, 2000) in {(r["d1"], r["d2"]) for r in pairs.collect()}
+    assert _cache_entries(spark) == before
+
+
+@pytest.mark.parametrize("hasher", ["xxhash64", "md5"])
+def test_curate_near_short_docs_are_singletons(spark, hasher):
+    """Docs with fewer tokens than the gram size have no n-gram: their
+    dup_ngram_frac is 0.0, they have no MinHash signature, and they come
+    out as singletons. Without the NULL-signature guard all of them would
+    share one band key per band (xxhash64 and concat_ws skip NULLs)."""
+    df = spark.createDataFrame(
+        [
+            (0, "alpha"),
+            (1, "alpha"),
+            (2, "alpha beta"),
+            (3, "alpha beta"),
+            (4, "gamma delta"),
+            (5, "one two three four five six seven eight nine ten"),
+            (6, "one two three four five six seven eight nine ten"),
+        ],
+        "doc_id long, text string",
+    )
+    out = {
+        r["doc_id"]: (r["n_near_dups"], r["dup_ngram_frac"])
+        for r in dedup.curate_near(df, min_alpha=0.0, hasher=hasher).collect()
+    }
+    assert out == {
+        0: (1, 0.0), 1: (1, 0.0), 2: (1, 0.0), 3: (1, 0.0), 4: (1, 0.0),
+        5: (2, 0.0),
+    }
+
+
+def test_curate_near_empty_corpus(spark):
+    df = spark.createDataFrame([], "doc_id long, text string")
+    assert dedup.curate_near(df).count() == 0
+
+
+def test_curate_near_without_near_dups_keeps_every_gated_doc(spark):
+    """No two docs are near-dups: every doc that passes the gates comes
+    out exactly once as a singleton, and gated-out docs stay out."""
+    rs = np.random.RandomState(3)
+    vocab = sorted({"".join(rs.choice(list("abcdefghij"), 6)) for _ in range(200)})
+    rows = [(i, " ".join(rs.choice(vocab, 40, replace=False))) for i in range(40)]
+    rows += [(100, "spam spam spam spam spam spam"), (101, "$$$ 123 &&& 456")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = [(r["doc_id"], r["n_near_dups"]) for r in dedup.curate_near(df).collect()]
+    assert sorted(got) == [(i, 1) for i in range(40)]
 
 
 def test_fingerprint_winnow_shared_run_guarantee(spark):
